@@ -54,12 +54,7 @@ object AnnScale {
     val baseDir = args(0)
     val scaledDir = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.functions.DotProduct.register(s)
     def minOf2(dir: String, cells: Int): Double = {

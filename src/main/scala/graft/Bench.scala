@@ -17,18 +17,7 @@ object Bench {
     // Contract: bench runs local[32] (BASELINE.md / driver brief); the env
     // var still overrides for constrained dev machines.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Pinned at build time so the plan environment is identical whether a
-      // storage-partitioned query (scan_v2_spj/join_spj, which also set
-      // these at runtime for cold/test sessions) has run yet or not —
-      // ordering-independent plans across the sweep.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Driver contract: no args. Extra args (local dev only) restrict the run
     // to the named queries.
@@ -51,26 +40,9 @@ object Bench {
     // the standing index sim_index_probe persists).
     if (picked.exists(q => graft.operators.Similarity.sharedFamily(q._1)))
       graft.operators.Similarity.warmShared(spark, sfDir)
-    // Consulted PER SWEEP, not snapshotted: the graph-ANN tiers warm
-    // lazily on first use mid-run (at whatever dir the triggering query
-    // ran against), and unpersisting a localCheckpoint orphans every
-    // later read of it.
-    def keepIds: Set[Int] =
-      graft.operators.Dedup.warmKeepIds ++
-        graft.operators.Similarity.warmKeepIds
-    // clearCache drops SQL-cache entries; the unpersist sweep additionally
-    // drops RDD storage blocks it does not cover (localCheckpoint'd edge
-    // lists in the clustering queries). The warm frames are exempt —
-    // unpersisting a localCheckpoint orphans every later read of it.
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => keepIds(id) }
-        .values.foreach(_.unpersist(blocking = false))
-    }
     if (new java.io.File(warmDir).isDirectory) picked.foreach { case (_, fn) =>
       try exec(fn(spark, warmDir)) catch { case _: Throwable => () }
-      dropCaches()
+      GraftSession.dropCaches(spark)
     }
     // Pre-warm the two-tier graph index at the TIMED dir, AFTER the JIT
     // warm-up loop (which lazily built tiers at warmDir — a dir switch
@@ -116,7 +88,7 @@ object Bench {
         }
       val dt = (System.nanoTime() - t0) / 1e9
       val clean = !dirtyBefore && !loadedNow
-      dropCaches()
+      GraftSession.dropCaches(spark)
       Pass(dt, ok, clean)
     }
     // Best over successful passes; also whether any successful pass ran

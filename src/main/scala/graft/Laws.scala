@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Law-check primitives shared by the multi-phase operators. */
@@ -21,5 +21,19 @@ object Laws {
       .groupBy(keys: _*)
       .agg(sum("__w").as("__w"))
       .where(col("__w") =!= 0L)
+  }
+
+  /** Both net-delta directions of a change (`ins` added, `del` removed)
+    * from ONE signed-count pass: the [[symDiff]] groups, checkpointed,
+    * each surviving row re-expanded |w| times — multiset-exact, equal to
+    * (ins.exceptAll(del), del.exceptAll(ins)) with one aggregate and one
+    * checkpoint instead of Spark's two ExceptAll rewrites. */
+  def netDelta(ins: DataFrame, del: DataFrame): (DataFrame, DataFrame) = {
+    val net = symDiff(ins, del).localCheckpoint()
+    def expand(side: Column) = net.where(side)
+      .select(ins.columns.toIndexedSeq.map(col) :+
+        explode(sequence(lit(1L), abs(col("__w")))).as("__i"): _*)
+      .drop("__i")
+    (expand(col("__w") > 0L), expand(col("__w") < 0L))
   }
 }

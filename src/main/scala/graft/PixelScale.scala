@@ -307,12 +307,7 @@ object PixelScale {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Base scene = 256² × 7 epochs; 10× pixels = 810² (810²/256² = 10.01).
     // Bytes chain: 24 → 240 frames of a fixed 128² field.

@@ -86,12 +86,7 @@ object ScaleStage {
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of the graph-ANN hub-probe
   * chain (the internal frame every graph-family query's declared output is
   * derived from — the declared frames themselves are localCheckpoint'd, so
@@ -11,13 +9,7 @@ object ToolGraphPlan {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.Similarity
     Similarity.warmShared(spark, sfDir)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,18 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Pinned at build time so the plan environment is identical whether a
-      // storage-partitioned query (scan_v2_spj/join_spj, which also set
-      // these at runtime for cold/test sessions) has run yet or not —
-      // ordering-independent plans across the sweep.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
@@ -38,11 +26,6 @@ object Verify {
     // cell assignment — the index sim_index_probe persists).
     if (selected.keys.exists(operators.Similarity.sharedFamily))
       operators.Similarity.warmShared(spark, sfDir)
-    // Consulted PER SWEEP, not snapshotted: the graph-ANN tiers warm
-    // lazily on first use mid-run, and unpersisting a localCheckpoint
-    // orphans every later read of it.
-    def keep: Set[Int] =
-      operators.Dedup.warmKeepIds ++ operators.Similarity.warmKeepIds
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     // Recursive delete for pre-run cleanup (below).
     def rmTree(p: java.nio.file.Path): Unit =
@@ -66,17 +49,7 @@ object Verify {
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Cleanup hook for query-internal caches: clearCache drops SQL-cache
-      // entries (dedup_ngram's shingle set), and the explicit unpersist
-      // sweep drops RDD storage blocks clearCache does NOT cover —
-      // localCheckpoint()'d edge lists (dedup_cluster/dedup_keep) register
-      // as persistent RDDs and would otherwise accumulate for the whole
-      // 100-query run. The warm frames' blocks are exempt: unpersisting a
-      // localCheckpoint leaves later reads with missing checkpoint blocks.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => keep(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      GraftSession.dropCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -2611,8 +2611,6 @@ object Similarity {
         // The hierarchy's contract: hold the recall floor AND dominate the
         // coarse-quantizer entry at equal beam, while reading fewer
         // candidates (the corpus-sized entry scan is what it removes).
-        if (sys.env.contains("GRAFT_ANN_DEBUG"))
-          println(s"[ann-debug] $sums")
         require(sums("hub")._1 >= 60L * sums("hub")._2,
           s"hub-entry recall ${sums("hub")._1 / sums("hub")._2}% fell below the 60% floor")
         require(sums("hub")._1 >= sums("ivf")._1,
@@ -2755,19 +2753,9 @@ object Similarity {
         // BOTH laws in ONE violations action (round-18 fixed-overhead
         // audit: two separate require jobs → one; same violations
         // detected — each leg is empty unless its law broke). Multiset
-        // equality as a SINGLE signed-count aggregate per leg (round-19):
-        // a.exceptAll(b) ∪ b.exceptAll(a) is empty ⟺ every row's
-        // (+1 per a-copy, −1 per b-copy) sum is zero — one exchange per
-        // leg instead of exceptAll's two full rewrites per direction.
-        def diffs(a: DataFrame, b: DataFrame, label: String) = {
-          val cols = a.columns.toIndexedSeq.map(col)
-          a.withColumn("w", lit(1L))
-            .unionAll(b.withColumn("w", lit(-1L)))
-            .groupBy(cols: _*)
-            .agg(sum("w").as("w"))
-            .where(col("w") =!= 0L)
-            .select(lit(label).as("law"))
-        }
+        // equality per leg is the single signed-count aggregate.
+        def diffs(a: DataFrame, b: DataFrame, label: String) =
+          graft.Laws.symDiff(a, b).select(lit(label).as("law"))
         val broken = diffs(artC, art, "artifact-roundtrip")
           .unionAll(diffs(cold, rebuilt, "cold≠rebuilt"))
           .groupBy("law").agg(count(lit(1)).as("n")).collect()
@@ -3146,20 +3134,17 @@ object Similarity {
         // rewrites per direction), and the PRE-refit recall sum consumes
         // the v2 beam ONCE — Σ_p (h_p·100 div k) over the hit counts is
         // exactly the old Σ of rank-1 recall_pct rows, without the
-        // broadcast join-back that re-consumed the beam frontier.
-        val ttDiffs = artC2.withColumn("w", lit(1L))
-          .unionAll(art1.unionAll(art2).withColumn("w", lit(-1L)))
-          .groupBy("kind", "tier", "src", "dst")
-          .agg(sum("w").as("w"))
-          .where(col("w") =!= 0L)
+        // broadcast join-back that re-consumed the beam frontier. The
+        // hit counts cover only probes with ≥1 hit (a probe with none
+        // adds 0), so the pre lane carries no probe count of its own.
+        val ttDiffs = graft.Laws.symDiff(artC2, art1.unionAll(art2))
           .select(lit("timetravel").as("law"), lit(0L).as("a"),
             lit(0L).as("b"))
         val recallSums = top2.join(exact, Seq("probe_id", "vec_id"))
           .groupBy("probe_id").agg(count(lit(1)).as("h"))
           .agg(coalesce(sum((col("h") * 100L / GannK).cast("long")),
-              lit(0L)).as("a"),
-            count(lit(1)).as("b"))
-          .select(lit("pre").as("law"), col("a"), col("b"))
+              lit(0L)).as("a"))
+          .select(lit("pre").as("law"), col("a"), lit(0L).as("b"))
           .unionAll(out.where(col("rank") === 1L)
             .agg(sum("recall_pct").cast("long").as("a"),
               count(lit(1)).as("b"))
@@ -3171,10 +3156,10 @@ object Similarity {
             (x.getLong(1), x.getLong(2), x.getLong(3))).toMap
         require(!sums.contains("timetravel"),
           "reading asof v2 after the refit diverged from base ∪ delta")
-        val (preR, preN, _) = sums("pre")
+        val (preR, _, _) = sums("pre")
         val (postR, postN, _) = sums("post")
         require(postR >= preR,
-          s"the refit lost recall: post $postR/$postN vs pre $preR/$preN")
+          s"the refit lost recall: post $postR/$postN vs pre $preR/$postN")
         require(postR >= 60L * postN,
           s"post-refit recall ${postR / postN}% fell below the 60% floor")
         out.orderBy("probe_id", "rank")

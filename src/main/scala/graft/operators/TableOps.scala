@@ -1150,22 +1150,7 @@ object TableOps {
           val (adds, rems) = CommitLog.changesAt(src, v)
           val ins = if (adds.isEmpty) o.limit(0) else rowsOf(src, adds)
           val del = if (rems.isEmpty) o.limit(0) else rowsOf(src, rems)
-          // ONE signed-count pass derives BOTH net-delta directions
-          // (Spark's ExceptAll rewrite IS this aggregate + re-expansion —
-          // run once instead of twice, one checkpoint instead of two;
-          // |w| copies re-expand each surviving row exactly, so the
-          // multiset semantics are unchanged).
-          val net = ins.withColumn("w", lit(1L))
-            .unionAll(del.withColumn("w", lit(-1L)))
-            .groupBy("key", "val").agg(sum("w").as("w"))
-            .where(col("w") =!= 0L)
-            .localCheckpoint()
-          def expand(df: org.apache.spark.sql.DataFrame) = df
-            .select(col("key"), col("val"),
-              explode(sequence(lit(1L), abs(col("w")))).as("i"))
-            .select("key", "val")
-          val netIns = expand(net.where(col("w") > 0L))
-          val netDel = expand(net.where(col("w") < 0L))
+          val (netIns, netDel) = graft.Laws.netDelta(ins, del)
           val delRange = netDel.agg(min("key"), max("key")).head
           if (delRange.isNullAt(0)) {
             // pure append: zero replica rewrites by construction
@@ -1182,14 +1167,7 @@ object TableOps {
           }
           val (rep, sv) = (CommitLog.readAsOf(s, dst, v).select("key", "val"),
             CommitLog.readAsOf(s, src, v).select("key", "val"))
-          // one symmetric-difference action, not two isEmpty jobs — and
-          // the difference itself is the single signed-count aggregate
-          // (one exchange; exceptAll in both directions was two full
-          // rewrites per direction). Same violations detected.
-          require(rep.withColumn("w", lit(1L))
-              .unionAll(sv.withColumn("w", lit(-1L)))
-              .groupBy("key", "val").agg(sum("w").as("w"))
-              .where(col("w") =!= 0L).isEmpty,
+          require(graft.Laws.symDiff(rep, sv).isEmpty,
             s"replica must equal source snapshot exactly at applied version $v")
         }
         // ---- output: per-version replica rollup (oracled) --------------

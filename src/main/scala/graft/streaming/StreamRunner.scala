@@ -751,21 +751,7 @@ object StreamRunner {
       if (adds.nonEmpty || rems.nonEmpty) {
         val ins = if (adds.isEmpty) ord.limit(0) else rowsOf(src, adds)
         val del = if (rems.isEmpty) ord.limit(0) else rowsOf(src, rems)
-        // ONE signed-count pass derives BOTH net-delta directions
-        // (Spark's ExceptAll rewrite IS this aggregate + re-expansion —
-        // run once instead of twice, one checkpoint instead of two; |w|
-        // copies re-expand each surviving row, multiset-exact).
-        val net = ins.withColumn("w", lit(1L))
-          .unionAll(del.withColumn("w", lit(-1L)))
-          .groupBy("key", "val").agg(sum("w").as("w"))
-          .where(col("w") =!= 0L)
-          .localCheckpoint()
-        def expand(df: DataFrame) = df
-          .select(col("key"), col("val"),
-            explode(sequence(lit(1L), abs(col("w")))).as("i"))
-          .select("key", "val")
-        val netIns = expand(net.where(col("w") > 0L))
-        val netDel = expand(net.where(col("w") < 0L))
+        val (netIns, netDel) = graft.Laws.netDelta(ins, del)
         val v = head + 1L
         val dr = netDel.agg(min("key"), max("key")).head
         if (dr.isNullAt(0)) {
@@ -804,14 +790,7 @@ object StreamRunner {
       val rep = CommitLog.readAsOf(s, dst, CommitLog.latestVersion(dst))
         .select("key", "val")
       val sv = rowsOf(src, CommitLog.filesAsOf(src, Long.MaxValue))
-      // one symmetric-difference action, not two isEmpty jobs — and the
-      // difference itself is the single signed-count aggregate (one
-      // exchange; exceptAll both ways was two full rewrites per
-      // direction). Same violations detected.
-      require(rep.withColumn("w", lit(1L))
-          .unionAll(sv.withColumn("w", lit(-1L)))
-          .groupBy("key", "val").agg(sum("w").as("w"))
-          .where(col("w") =!= 0L).isEmpty,
+      require(graft.Laws.symDiff(rep, sv).isEmpty,
         "streamed replica diverged from the source snapshot")
     }
     runPass() // pass 1: the backlog (v1 + v2) in one batch

@@ -7,21 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * sequentially under sbt's single test JVM). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // Same plan environment as the Verify/Bench harnesses.
+    val s = GraftSession.builder("4")
       .appName("graft-test")
       // The deployment-config path for the library's Catalyst extensions
       // (static conf — must be set when the first session is built).
       // ExtensionsSpec asserts the injection took effect.
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Same plan environment as the Verify/Bench harnesses (see
-      // Verify.scala): storage-partitioned execution enabled up front so
-      // plan pins are independent of which test touched the conf first.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
